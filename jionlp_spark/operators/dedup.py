@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from jionlp_spark.functions.ndet import ndet as _ndet
+from jionlp_spark.operators.graph import _bounded_rows
 
 
 def _java_regex_literal(s: str) -> str:
@@ -470,6 +471,8 @@ def incremental_lsh_dedup(spark, index_path: str, new_docs: DataFrame,
     dup_ids = dups.select(F.col('new_doc').alias('doc_id')).distinct()
     survivor_bands = new_banded.join(dup_ids, 'doc_id', 'left_anti') \
         .localCheckpoint()
+    # both eager checkpoints above are all that read new_banded
+    new_banded.unpersist()
     updated = survivor_bands if idx is None else idx.union(survivor_bands)
 
     index = catalog.run_stage(spark, index_path, 'lsh_index',
@@ -550,6 +553,14 @@ def dedup_components(pairs: DataFrame, a_col: str = 'doc_a',
     clusters (which would let dups survive), localCheckpoint every
     round so lineage stays flat, and produce identical output:
     → (doc_id, cluster) where cluster = min doc_id of the component.
+
+    impl='star' first collects the oriented, deduplicated edge table
+    with ``graph._bounded_rows``: one ``limit(cutoff + 1)`` collect that
+    is also the exact size test.  At most ``graph._DRIVER_EDGE_CUTOFF``
+    edges are labelled on the driver by union-find (the same rows, no
+    per-round jobs); above it the star rounds run over the same
+    checkpointed edge table, so the size test costs one extra bounded
+    job.
     """
     if impl not in ('star', 'propagate'):
         raise ValueError(f"impl must be 'star' or 'propagate', got {impl!r}")
@@ -576,6 +587,7 @@ def dedup_components(pairs: DataFrame, a_col: str = 'doc_a',
         if changed == 0:
             converged = True
             break
+    edges.unpersist()
     if not converged:
         raise RuntimeError(
             f'dedup_components did not converge in {max_iter} rounds — '
@@ -585,18 +597,12 @@ def dedup_components(pairs: DataFrame, a_col: str = 'doc_a',
                          F.col('label').alias('cluster'))
 
 
-# pair sets at or under this size short-circuit to driver union-find
-# (~a few MB collected); larger sets take the distributed star rounds
-_SMALL_COMPONENTS_CUTOFF = 100_000
-
-
-def _components_driver(e: DataFrame) -> DataFrame:
-    """Exact min-label components for a BOUNDED (u, v) edge table via
-    driver-side union-find (union-by-min keeps every root the component
-    minimum).  → (doc_id, cluster) over all endpoints, the same rows the
-    star fixed point produces."""
-    from pyspark.sql import types as T
-    rows = e.collect()
+def _components_driver(e: DataFrame, rows: list) -> DataFrame:
+    """Exact min-label components for the collected ``rows`` of a
+    BOUNDED (u, v) edge table ``e`` via driver-side union-find
+    (union-by-min keeps every root the component minimum).
+    → (doc_id, cluster) over all endpoints, the same rows the star
+    fixed point produces."""
     parent: dict = {}
 
     def find(x):
@@ -643,21 +649,22 @@ def _components_star(edges: DataFrame, max_iter: int) -> DataFrame:
     on the child side) → themselves via the left join on the original
     vertex set.
     """
-    verts = (edges.select('a').union(edges.select(F.col('b').alias('a')))
-             .distinct().select(F.col('a').alias('v')).localCheckpoint(eager=False))
     e = (edges.select(F.greatest('a', 'b').alias('u'),
                       F.least('a', 'b').alias('v'))
          .distinct().localCheckpoint(eager=False))
+    rows = _bounded_rows(e)
+    if rows is not None:
+        # bounded pair sets (the bounded collect is the exact size test)
+        # resolve on the driver with union-find — each star ROUND costs
+        # several driver-planned jobs, which dominates wall time for
+        # edge tables this size; output is identical: every endpoint
+        # labelled with its component's min id.  Above the cutoff the
+        # diameter-independent star rounds run unchanged, over the same
+        # checkpointed edge table.
+        return _components_driver(e, rows)
+    verts = (e.select(F.col('u').alias('v')).union(e.select('v'))
+             .distinct().localCheckpoint(eager=False))
     n_prev = e.count()
-    if n_prev <= _SMALL_COMPONENTS_CUTOFF:
-        # bounded pair sets (the count above is exact) resolve on the
-        # driver with union-find — each star ROUND costs several driver-
-        # planned jobs, which dominates wall time for edge tables this
-        # size; the collect is pair-set-bounded (same class as the
-        # centroid/codebook collects), and output is identical: every
-        # endpoint labelled with its component's min id.  Above the
-        # cutoff the diameter-independent star rounds run unchanged.
-        return _components_driver(e)
     converged = False
     for _ in range(max_iter):
         both = e.union(e.select(F.col('v').alias('u'),

@@ -43,6 +43,7 @@ def test_components_driver_matches_star(spark):
     import random
 
     from jionlp_spark.operators import dedup as dd
+    from jionlp_spark.operators import graph
     rng = random.Random(13)
     cases = [
         [(1, 2)],
@@ -55,13 +56,13 @@ def test_components_driver_matches_star(spark):
         df = spark.createDataFrame(pairs, 'doc_a long, doc_b long')
         small = {(r['doc_id'], r['cluster'])
                  for r in dd.dedup_components(df).collect()}
-        old_cut = dd._SMALL_COMPONENTS_CUTOFF
-        dd._SMALL_COMPONENTS_CUTOFF = -1      # force the star rounds
+        old_cut = graph._DRIVER_EDGE_CUTOFF
+        graph._DRIVER_EDGE_CUTOFF = -1        # force the star rounds
         try:
             star = {(r['doc_id'], r['cluster'])
                     for r in dd.dedup_components(df).collect()}
         finally:
-            dd._SMALL_COMPONENTS_CUTOFF = old_cut
+            graph._DRIVER_EDGE_CUTOFF = old_cut
         assert small == star and small
 
 
@@ -2314,6 +2315,129 @@ def test_pagerank_warm_same_fixed_point_and_faster(spark):
     gap_2 = sum(abs(warm[v] - cold[v]) for v in conv)
     gap_14 = sum(abs(warm_long[v] - conv[v]) for v in conv)
     assert gap_14 < 0.25 * gap_2
+
+
+def _cutoff_run(monkeypatch, cutoff, fn):
+    """→ ('ok', {key: value}) or ('err', error class) of ``fn()``
+    collected under ``graph._DRIVER_EDGE_CUTOFF = cutoff`` (-1 forces
+    the distributed rounds)."""
+    from jionlp_spark.operators import graph
+    with monkeypatch.context() as m:
+        m.setattr(graph, '_DRIVER_EDGE_CUTOFF', cutoff)
+        try:
+            return 'ok', {tuple(r)[0]: tuple(r)[1] for r in fn().collect()}
+        except Exception as exc:    # the same failure on both paths
+            return 'err', getattr(exc, 'getCondition', lambda: None)() \
+                or type(exc).__name__
+
+
+def _local_taken(monkeypatch):
+    """Records, per pagerank call, whether the driver solve answered."""
+    from jionlp_spark.operators import graph
+    taken = []
+    real = graph._pagerank_local
+
+    def spy(*a, **k):
+        out = real(*a, **k)
+        taken.append(out is not None)
+        return out
+    monkeypatch.setattr(graph, '_pagerank_local', spy)
+    return taken
+
+
+def test_pagerank_driver_matches_distributed(spark, monkeypatch):
+    """The bounded driver solve is bit-identical (==, not isclose) to
+    the distributed rounds on 26 random graphs — string and long keys,
+    parallel edges, dangling dst rows, iters 2/3/5/14 — cold and warm
+    (a prior missing nodes, with null scores and nodes not in the
+    graph)."""
+    import random
+
+    from jionlp_spark.operators.graph import pagerank, pagerank_warm
+    taken = _local_taken(monkeypatch)
+    rng = random.Random(29)
+    for k in range(26):
+        iters = (2, 3, 5, 2, 3, 5, 14)[k % 7]
+        key = 'string' if k % 2 else 'long'
+        name = (lambda i: f'n{i}') if key == 'string' else (lambda i: i)
+        n = rng.randint(2, 30)
+        rows = [(name(u), name(rng.randrange(n + 4)), rng.randint(1, 9))
+                for u in range(n) for _ in range(rng.randint(1, 4))]
+        edges = spark.createDataFrame(
+            rows, f'src {key}, dst {key}, weight long')
+        if k % 3:
+            def fn():
+                return pagerank(edges, iters=iters)
+        else:
+            prior = spark.createDataFrame(
+                [(name(u), None if u % 4 == 0 else rng.random())
+                 for u in range(0, n + 3, 2)], f'v {key}, pr double')
+
+            def fn():
+                return pagerank_warm(edges, prior, iters=iters)
+        local = _cutoff_run(monkeypatch, 10 ** 6, fn)
+        dist = _cutoff_run(monkeypatch, -1, fn)
+        assert local[0] == 'ok' and local == dist, (k, iters)
+    assert taken.count(True) == 26
+
+
+def test_pagerank_driver_fallbacks(spark, monkeypatch):
+    """Inputs the driver twin cannot reproduce exactly take the
+    distributed rounds, so a null src or weight, a zero out-weight
+    (an ANSI divide by zero), and a prior with a duplicate node (the
+    left join fans out the start vector) behave as before."""
+    from jionlp_spark.operators.graph import pagerank, pagerank_warm
+    taken = _local_taken(monkeypatch)
+    base = [('a', 'b', 2), ('b', 'a', 1), ('b', 'c', 3), ('c', 'a', 1)]
+    schema = 'src string, dst string, weight long'
+    cases = {
+        'null_src': base + [(None, 'a', 1)],
+        'null_weight': base + [('a', 'c', None)],
+        'zero_out_weight': base + [('d', 'a', 0)],
+    }
+    for name, rows in cases.items():
+        edges = spark.createDataFrame(rows, schema)
+        got = _cutoff_run(monkeypatch, 10 ** 6,
+                          lambda: pagerank(edges, iters=3))
+        assert got == _cutoff_run(monkeypatch, -1,
+                                  lambda: pagerank(edges, iters=3)), name
+    edges = spark.createDataFrame(base, schema)
+    prior = spark.createDataFrame([('a', 0.5), ('a', 0.25), ('b', 0.1)],
+                                  'v string, pr double')
+    got = _cutoff_run(monkeypatch, 10 ** 6,
+                      lambda: pagerank_warm(edges, prior, iters=2))
+    assert got == _cutoff_run(monkeypatch, -1,
+                              lambda: pagerank_warm(edges, prior, iters=2))
+    assert not any(taken), taken
+
+
+def test_driver_cutoff_boundary(spark, monkeypatch):
+    """The bounded collect is an exact size test: cutoff = edge count
+    solves on the driver, edge count - 1 takes the distributed rounds,
+    and both give the same rows — for pagerank and dedup_components."""
+    from jionlp_spark.operators import dedup as dd
+    from jionlp_spark.operators.graph import pagerank
+    taken = _local_taken(monkeypatch)
+    rows = [(u, (u * 7 + 3) % 12, u % 3 + 1) for u in range(12)] + \
+           [(u, (u + 1) % 12, 2) for u in range(12)]
+    edges = spark.createDataFrame(rows, 'src long, dst long, weight long')
+    at = _cutoff_run(monkeypatch, len(rows), lambda: pagerank(edges))
+    below = _cutoff_run(monkeypatch, len(rows) - 1, lambda: pagerank(edges))
+    assert taken == [True, False] and at[0] == 'ok' and at == below
+
+    drivers = []
+    real = dd._components_driver
+    monkeypatch.setattr(dd, '_components_driver',
+                        lambda *a: drivers.append(1) or real(*a))
+    pairs = [(1, 2), (2, 3), (5, 4), (7, 8), (9, 8), (20, 21)]
+    df = spark.createDataFrame(pairs, 'doc_a long, doc_b long')
+    at = _cutoff_run(monkeypatch, len(pairs),
+                     lambda: dd.dedup_components(df))
+    below = _cutoff_run(monkeypatch, len(pairs) - 1,
+                        lambda: dd.dedup_components(df))
+    assert drivers == [1] and at == below
+    assert at[1] == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 7: 7, 8: 7, 9: 7,
+                     20: 20, 21: 20}
 
 
 def test_neighbor_agg_cap_mean_and_self(spark):

@@ -313,3 +313,35 @@ def test_rule_mining_broadcast_and_no_python(spark):
     plan = _plan(entry.queries()['kg_rule_mining'](
         spark, '/root/testdata/sf0.01'))
     assert 'BroadcastHashJoin' in plan or 'BroadcastExchange' in plan
+
+
+def test_graph_tier_job_counts(spark):
+    """Small graphs take the bounded driver path: host PageRank over a
+    shuffled host graph and dedup components over a small pair set run
+    3 jobs each (the shuffle stage under the edge checkpoint, the
+    bounded collect, and the collect of the result).  The distributed
+    rounds run 26 and 29 jobs on the same inputs, so a return to
+    per-round jobs fails here."""
+    from jionlp_spark.operators.dedup import dedup_components
+    from jionlp_spark.operators.weblinks import host_edges, host_pagerank
+    sc = spark.sparkContext
+
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build().collect()
+        finally:
+            sc.setLocalProperty('spark.jobGroup.id', None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    links = spark.createDataFrame(
+        [(f'h{i % 9}.example.com', f'h{(i * 5 + i // 9 + 1) % 9}.example.com')
+         for i in range(90)], 'src_host string, dst_host string')
+    pairs = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 40) for i in range(40)],
+        'doc_a long, doc_b long').distinct()
+    got = (jobs('guard_host_pagerank',
+                lambda: host_pagerank(host_edges(links))),
+           jobs('guard_dedup_components',
+                lambda: dedup_components(pairs)))
+    assert got == (3, 3), got
